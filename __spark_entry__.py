@@ -6371,7 +6371,7 @@ def oracle_sql() -> dict[str, str]:
         # intermediate is an exact integer (sum, sum-of-squares), the
         # final divisions/sqrt are single IEEE ops with identical
         # association — doubles match bit-for-bit, no rounding needed
-        "image_features": """
+        "image_features": f"""
             SELECT doc_id, n_px,
                    s / n_px AS px_mean,
                    sqrt((ssq - s * s / n_px) / n_px) AS px_std
@@ -6381,14 +6381,14 @@ def oracle_sql() -> dict[str, str]:
                      CAST(list_sum(pixels) AS DOUBLE) AS s,
                      CAST(list_sum(list_transform(pixels,
                           x -> CAST(x AS BIGINT) * x)) AS DOUBLE) AS ssq
-              FROM read_parquet('/root/repo/fixtures/media_bmp_pixels.parquet')
+              FROM read_parquet('{_FIXTURE_DIR}/media_bmp_pixels.parquet')
             )
         """,
         # ground-truth int16 sample arrays vs Spark's stdlib-wave PCM
         # decode of the paired payloads; RMS from the exact integer
         # sum-of-squares, zero crossings an exact integer count — same
         # bit-for-bit double parity as image_features
-        "audio_features": """
+        "audio_features": f"""
             SELECT doc_id, n_samples,
                    CAST(n_samples AS DOUBLE) / sample_rate AS duration_sec,
                    sqrt(ssq / n_samples) / 32768.0 AS rms,
@@ -6401,7 +6401,7 @@ def oracle_sql() -> dict[str, str]:
                      CAST(list_sum(list_transform(range(1, len(samples)),
                           i -> CASE WHEN (samples[i] < 0) <> (samples[i+1] < 0)
                                THEN 1 ELSE 0 END)) AS DOUBLE) AS c
-              FROM read_parquet('/root/repo/fixtures/media_wav_samples.parquet')
+              FROM read_parquet('{_FIXTURE_DIR}/media_wav_samples.parquet')
             )
         """,
     }

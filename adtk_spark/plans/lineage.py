@@ -25,7 +25,9 @@ def lineage_rows(df: DataFrame, table: str, snapshot_id: int,
             F.count(F.lit(1)).alias("n_rows"),
             F.min(ts).alias("min_ts"),
             F.max(ts).alias("max_ts"),
-            F.countDistinct(src).alias("n_sources"),
+            # collect_set merges map-side, so the whole summary is one
+            # shuffle; countDistinct would plan a second
+            F.size(F.collect_set(src)).cast("long").alias("n_sources"),
         )
         .select(
             F.lit(table).alias("table"),
@@ -41,7 +43,7 @@ def commit_with_lineage(catalog, spark, df: DataFrame, table: str,
                         *, source_col: str = "source",
                         ts_col: str = "bucket_ts") -> int:
     snap_id = catalog.commit(df, table, meta)
-    written = catalog.read_since(spark, table, snap_id - 1)
+    written = catalog.read_snapshot(spark, table, snap_id)
     lin = lineage_rows(written, table, snap_id, source_col=source_col, ts_col=ts_col)
     catalog.commit(lin, "_lineage", {"for_table": table, "for_snapshot": snap_id})
     return snap_id

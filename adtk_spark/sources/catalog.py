@@ -14,6 +14,25 @@ Crash safety: data files are written first, then the manifest is
 replaced atomically (tmp file + os.replace). A crash between the two
 leaves an orphan directory that is never read — exactly Iceberg's
 uncommitted-data-file semantics.
+
+Each snapshot entry in the manifest carries what the write itself
+observed, so no commit reads its own output back:
+
+- ``rows``: the number of rows written;
+- ``stats``: the zone map ``{"col", "min", "max"}`` of the stats column
+  (absent when the snapshot is empty or has no stats column);
+- ``schema``: the written data schema as Spark JSON, with every field
+  nullable as a parquet reader sees it and without the ``partition_by``
+  columns (Iceberg's table metadata carrying the schema).
+
+Reads hand the recorded schema to the parquet reader, so building a
+DataFrame over committed snapshots starts no Spark job; ``snap=`` and
+the ``partition_by`` columns are still discovered from the paths. A
+read falls back to Spark's schema inference when any of its snapshots
+has no recorded schema (committed before schemas were recorded) or when
+its snapshots record different schemas — e.g. a ``tier_1m`` holding
+both streamed and batch snapshots. The fallback returns what inference
+always returned.
 """
 
 from __future__ import annotations
@@ -22,8 +41,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _split_schema(s: str) -> list[str]:
@@ -41,6 +61,19 @@ def _split_schema(s: str) -> list[str]:
     if cur:
         out.append("".join(cur))
     return out
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — the schema a
+    parquet read of written data reports."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class TierCatalog:
@@ -89,33 +122,36 @@ class TierCatalog:
         skips whole snapshot directories whose range cannot intersect a
         time-bounded query — pruning that happens on the DRIVER from
         the manifest alone, before any file is listed or opened
-        (Iceberg's manifest-entry min/max file skipping). The stats
-        scan reads only that column from the just-written files, which
-        parquet serves from footer metadata."""
+        (Iceberg's manifest-entry min/max file skipping).
+
+        The zone map and the row count come from an ``Observation`` on
+        the write itself, so a commit is one Spark action and never
+        reads back what it wrote. The entry also records the written
+        schema, which lets later reads skip schema inference."""
         m = self._load()
         t = m["tables"].setdefault(table, {"snapshots": []})
         snap_id = (t["snapshots"][-1]["id"] + 1) if t["snapshots"] else 1
         path = os.path.join(self.root, table, f"snap={snap_id}")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
         if stats_col == "auto":
             stats_col = next(
                 (c for c in ("bucket_ts", "ts") if c in df.columns), None)
-        stats = None
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows")]
         if stats_col is not None:
-            spark = df.sparkSession
-            row = spark.read.parquet(path).agg(
-                F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi")
-            ).collect()[0]
-            if row["lo"] is not None:
-                stats = {"col": stats_col,
-                         "min": self._iso(row["lo"]),
-                         "max": self._iso(row["hi"])}
-        entry = {"id": snap_id, "committed_at": time.time(), "meta": meta or {}}
-        if stats:
-            entry["stats"] = stats
+            metrics += [F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi")]
+        w = df.observe(obs, *metrics).write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
+        seen = obs.get
+        data_schema = StructType(
+            [f for f in df.schema.fields if f.name not in (partition_by or [])])
+        entry = {"id": snap_id, "committed_at": time.time(), "meta": meta or {},
+                 "rows": seen["rows"], "schema": _nullable(data_schema).json()}
+        if seen.get("lo") is not None:
+            entry["stats"] = {"col": stats_col,
+                              "min": self._iso(seen["lo"]),
+                              "max": self._iso(seen["hi"])}
         t["snapshots"].append(entry)
         self._store(m)
         return snap_id
@@ -220,11 +256,27 @@ class TierCatalog:
         ids = self.snapshots(table)
         return ids[-1] if ids else None
 
+    def schema(self, table: str, snapshot_id: int) -> StructType | None:
+        """The data schema ``commit`` recorded for a snapshot; None for
+        a snapshot committed before schemas were recorded."""
+        for s in self._load()["tables"].get(table, {}).get("snapshots", []):
+            if s["id"] == snapshot_id and "schema" in s:
+                return StructType.fromJson(json.loads(s["schema"]))
+        return None
+
     def _read_ids(self, spark: SparkSession, table: str, ids: list[int]) -> DataFrame | None:
         if not ids:
             return None
-        paths = [os.path.join(self.root, table, f"snap={i}") for i in ids]
-        return spark.read.option("basePath", os.path.join(self.root, table)).parquet(*paths)
+        base = os.path.join(self.root, table)
+        reader = spark.read.option("basePath", base)
+        snaps = self._load()["tables"][table]["snapshots"]
+        recorded = {s["id"]: s.get("schema") for s in snaps}
+        schemas = {recorded[i] for i in ids}
+        if len(schemas) == 1 and None not in schemas:
+            # one recorded schema: no inference job. Unrecorded or mixed
+            # schemas keep inference, which reads exactly as it always did
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*[os.path.join(base, f"snap={i}") for i in ids])
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
         """All committed snapshots (uncommitted orphan dirs invisible)."""

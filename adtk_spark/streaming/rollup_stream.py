@@ -195,11 +195,18 @@ def run_into_catalog(agg: DataFrame, catalog, table: str, checkpoint: str) -> No
     buckets. That is exactly a bucket restatement: ``read_tier_latest``
     resolves (source, bucket_ts) to the newest snapshot, so replays are
     idempotent to readers — same at-least-once-commit + latest-wins-read
-    pairing the batch incremental refresher uses."""
+    pairing the batch incremental refresher uses.
+
+    Each epoch's batch is persisted around the emptiness check and the
+    commit (Spark's foreachBatch pattern for more than one action), so
+    the stateful plan runs once per epoch, not once per action."""
     def _commit(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        catalog.commit(batch_df, table, meta={"stream_epoch": int(epoch_id)})
+        batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                catalog.commit(batch_df, table, meta={"stream_epoch": int(epoch_id)})
+        finally:
+            batch_df.unpersist()
 
     q = (
         agg.writeStream.outputMode("append")

@@ -273,3 +273,205 @@ def test_range_read_after_compact_vacuum(spark, tmp_path):
     assert ranged.count() == 3
     latest = read_tier_latest(cat, spark, "tier_1m", lo, hi)
     assert {r["mean"] for r in latest.collect()} == {0.0, 1.0, 2.0}
+
+
+def _jobs_started(spark, fn):
+    """(fn(), ids of the Spark jobs fn started), counted under a fresh
+    job group. The status store is fed by the listener bus in order, so
+    once a later probe job is visible every job fn started is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, probe = f"reads-{uuid.uuid4()}", f"probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, "catalog reads")
+    try:
+        out = fn()
+        sc.setJobGroup(probe, "listener bus probe")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 60
+    while not sc.statusTracker().getJobIdsForGroup(probe) and time.time() < deadline:
+        time.sleep(0.05)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _entry(cat, table, snap):
+    return next(s for s in cat._load()["tables"][table]["snapshots"] if s["id"] == snap)
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_commit_records_zone_map_rows_and_schema(spark, tmp_path, tz):
+    """The manifest's ``rows`` and ``stats`` come from the write itself
+    and equal a direct count/min/max of the written snapshot — for a
+    plain, a ``partition_by`` and an empty commit, also in a non-UTC
+    session across a DST switch. The recorded schema reads back exactly
+    what schema inference sees."""
+    import datetime as dt
+
+    cat = TierCatalog(str(tmp_path / "zm"))
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = spark.createDataFrame(
+            [(f"s{i % 3}", dt.datetime(2025, 3, 8, 20) + dt.timedelta(minutes=37 * i),
+              float(i)) for i in range(200)],
+            "source string, bucket_ts timestamp, mean double")
+        plain = cat.commit(df, "t")
+        parted = cat.commit(df.withColumn("day", F.to_date("bucket_ts")), "t",
+                            partition_by=["day"])
+        empty = cat.commit(df.where(F.col("mean") < 0), "t")
+        assert (plain, parted, empty) == (1, 2, 3)
+
+        for snap in (plain, parted, empty):
+            entry = _entry(cat, "t", snap)
+            got = cat.read_snapshot(spark, "t", snap).agg(
+                F.count(F.lit(1)).alias("n"), F.min("bucket_ts").alias("lo"),
+                F.max("bucket_ts").alias("hi")).collect()[0]
+            assert entry["rows"] == got["n"]
+            if got["n"] == 0:
+                assert "stats" not in entry
+            else:
+                assert entry["stats"] == {"col": "bucket_ts",
+                                          "min": got["lo"].isoformat(),
+                                          "max": got["hi"].isoformat()}
+        assert _entry(cat, "t", plain)["rows"] == 200
+
+        # partition columns are discovered from the paths, not recorded
+        assert "day" not in cat.schema("t", parted).fieldNames()
+        for snap in (plain, parted):
+            path = str(tmp_path / "zm" / "t" / f"snap={snap}")
+            inferred = spark.read.option("basePath", str(tmp_path / "zm" / "t")) \
+                .parquet(path)
+            recorded = cat.read_snapshot(spark, "t", snap)
+            assert recorded.schema == inferred.schema
+            assert sorted(recorded.collect()) == sorted(inferred.collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_catalog_reads_start_no_job(spark, tmp_path):
+    """With schemas recorded in the manifest, building a read over a
+    multi-snapshot table starts no Spark job (no schema inference); the
+    first job is the caller's action. Snapshots whose written schemas
+    differ only in nullability record the same (nullable) schema."""
+    import datetime as dt
+
+    cat = TierCatalog(str(tmp_path / "nj"))
+    for day in (1, 2, 3):
+        cat.commit(spark.createDataFrame(
+            [(f"s{h % 2}", dt.datetime(2025, 6, day, h), float(h)) for h in range(6)],
+            f"source string {'NOT NULL' if day == 1 else ''}, bucket_ts timestamp,"
+            " mean double"), "tier_1h")
+    assert cat.schema("tier_1h", 1) == cat.schema("tier_1h", 3)
+    lo, hi = dt.datetime(2025, 6, 2), dt.datetime(2025, 6, 3)
+    dfs, jobs = _jobs_started(spark, lambda: [
+        cat.read(spark, "tier_1h"),
+        cat.read_since(spark, "tier_1h", 1),
+        cat.read_snapshot(spark, "tier_1h", 2),
+        cat.read_range(spark, "tier_1h", lo, hi),
+        read_tier_latest(cat, spark, "tier_1h"),
+        read_tier_latest(cat, spark, "tier_1h", lo, hi),
+    ])
+    assert jobs == []
+    assert [d.count() for d in dfs] == [18, 12, 6, 6, 18, 6]
+
+
+def test_mixed_schema_read_falls_back_to_inference(spark, tmp_path):
+    """A tier_1m holding a batch snapshot (with ``vq``) and a streamed
+    one (no ``vq``), as ``rollup_job --stream-ingest`` leaves it: the
+    snapshots record different schemas, so reads keep Spark's schema
+    inference and return the columns and rows inference always gave."""
+    import datetime as dt
+
+    from adtk_spark.plans.tiers import rollup_raw
+
+    def series(day):
+        return spark.createDataFrame(
+            [(f"s{i % 2}", dt.datetime(2025, 7, day, 0, i % 5), float(i))
+             for i in range(20)],
+            "source string, ts timestamp, value double")
+
+    cat = TierCatalog(str(tmp_path / "mx"))
+    cat.commit(rollup_raw(series(1), "1m"), "tier_1m")
+    streamed = rollup_raw(series(2), "1m").select(
+        "source", "bucket_ts", "cnt", "vmin", "vmax", "vsum", "mean")
+    cat.commit(streamed, "tier_1m")
+    assert "vq" in cat.schema("tier_1m", 1).fieldNames()
+    assert "vq" not in cat.schema("tier_1m", 2).fieldNames()
+
+    df, jobs = _jobs_started(spark, lambda: cat.read(spark, "tier_1m"))
+    assert jobs  # the inference job
+    assert df.columns == ["source", "bucket_ts", "cnt", "vmin", "vmax", "vsum",
+                          "vq", "mean", "snap"]
+    rows = {(r["snap"], r["source"], r["bucket_ts"]): (r["cnt"], r["vq"])
+            for r in df.collect()}
+    assert len(rows) == 20
+    assert all(vq is not None for (snap, _, _), (_, vq) in rows.items() if snap == 1)
+    assert all(vq is None for (snap, _, _), (_, vq) in rows.items() if snap == 2)
+    assert sum(cnt for cnt, _ in rows.values()) == 40
+
+
+def test_lineage_rows_summarize_each_read_partition(spark, tmp_path):
+    """``commit_with_lineage`` records one row per partition of the
+    committed snapshot's read: its row count, bucket_ts range and
+    distinct sources, exactly as a direct groupBy over that read."""
+    import datetime as dt
+
+    from adtk_spark.plans.lineage import commit_with_lineage
+
+    cat = TierCatalog(str(tmp_path / "ln"))
+    df = spark.createDataFrame(
+        [(f"s{i % (1 + i % 4)}", dt.datetime(2025, 8, 1) + dt.timedelta(minutes=i),
+          float(i)) for i in range(400)],
+        "source string, bucket_ts timestamp, mean double").repartition(4)
+    snap = commit_with_lineage(cat, spark, df, "tier_1m")
+
+    lin = cat.read(spark, "_lineage")
+    assert lin.columns == ["table", "snapshot_id", "partition_id", "n_rows", "min_ts",
+                           "max_ts", "n_sources", "recorded_at", "snap"]
+    got = {tuple(r) for r in lin.drop("recorded_at", "snap").collect()}
+    want = {("tier_1m", snap) + tuple(r) for r in
+            cat.read_snapshot(spark, "tier_1m", snap)
+            .groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count(F.lit(1)), F.min("bucket_ts"), F.max("bucket_ts"),
+                 F.countDistinct("source")).collect()}
+    assert got == want and len(got) > 1
+    assert dict(lin.dtypes)["n_sources"] == "bigint"
+
+
+def test_refresh_flavor_guards_read_the_manifest_schema(spark, tmp_path):
+    """refresh_tiers refuses to mix sketch and sketchless tier
+    snapshots. It reads the newest tier_1m schema from the manifest, and
+    opens that snapshot instead on a catalog committed before schemas
+    were recorded."""
+    import json
+    import os
+
+    def raw(seed):
+        return token_corpus(spark, 300, n_sources=2, seed=seed, span_secs=3600)
+
+    def forget_schemas(cat):
+        path = os.path.join(cat.root, "_snapshots.json")
+        with open(path) as f:
+            m = json.load(f)
+        for t in m["tables"].values():
+            for s in t["snapshots"]:
+                s.pop("schema", None)
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    for sketch, match in ((False, "have no vdigest column"),
+                          (True, "carry a vdigest column")):
+        cat = TierCatalog(str(tmp_path / f"fg{sketch}"))
+        cat.commit(raw(1), "raw")
+        refresh_tiers(cat, spark, sketch=sketch)
+        cat.commit(raw(2), "raw")
+        with pytest.raises(ValueError, match=match):
+            refresh_tiers(cat, spark, sketch=not sketch)
+        forget_schemas(cat)
+        assert cat.schema("tier_1m", 1) is None
+        with pytest.raises(ValueError, match=match):
+            refresh_tiers(cat, spark, sketch=not sketch)
+        assert refresh_tiers(cat, spark, sketch=sketch)["processed"] == 1

@@ -412,6 +412,22 @@ def test_extract_audio_features_real_wav_decode(spark):
         float(np.sqrt(np.mean(x * x))), abs=1e-12)
 
 
+def test_media_oracles_read_fixtures_beside_entry_module():
+    """The image/audio oracle SQL reads its ground-truth arrays from the
+    fixtures/ directory next to __spark_entry__.py, wherever the
+    checkout lives."""
+    import os
+
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as entry
+
+    fx = os.path.join(os.path.dirname(os.path.abspath(entry.__file__)), "fixtures")
+    sql = entry.oracle_sql()
+    for name in ("image_features", "audio_features"):
+        assert f"read_parquet('{fx}/" in sql[name]
+        assert len(duckdb.sql(sql[name]).fetchall()) == 50
+
+
 def test_media_stats_match_fixture_ground_truth(spark):
     """The committed contract fixtures pair BINARY payloads with their
     ground-truth decoded arrays (tools/gen_media_fixture.py). image_stats
@@ -1167,6 +1183,39 @@ def test_duplicate_spans_property(spark, seeds):
     assert got == want, (texts, got, want)
 
 
+def test_ivf_split_oversized_sub_centroids_deterministic(spark, monkeypatch):
+    """The k-means sample of each oversized cell is sorted by its md5
+    rank before clustering, so two calls over differently partitioned
+    copies of the same rows fit identical sub-centroids."""
+    import numpy as np
+
+    from adtk_spark.operators import ann
+
+    fits = []
+    kmeans = ann._kmeans
+
+    def recording(X, k, **kw):
+        out = kmeans(X, k, **kw)
+        fits.append((X.tolist(), out.tolist()))
+        return out
+
+    monkeypatch.setattr(ann, "_kmeans", recording)
+    rng = np.random.RandomState(11)
+    rows = [(i, [float(x) for x in rng.normal(size=3)], i % 2)
+            for i in range(120)]
+    idx = spark.createDataFrame(rows, "id long, v array<double>, list_id int")
+
+    runs = []
+    for parts in (1, 7):
+        fits.clear()
+        out = ann.ivf_split_oversized(idx.repartition(parts), max_cell=20,
+                                      max_depth=1, sample=40)
+        assigned = sorted((r["id"], r["list_id"]) for r in out.collect())
+        runs.append((sorted(fits), assigned))
+    assert len(runs[0][0]) == 2  # both cells were split
+    assert runs[0] == runs[1]
+
+
 def test_oversized_ivf_cell_split_recovers_pairs(spark):
     """r04 VERDICT item #6: max_cell used to DROP oversized cells from
     candidate generation — silent recall loss exactly where duplicates
@@ -1579,6 +1628,16 @@ def test_rare_token_rate_relative_mode(spark):
     out_abs = {r["doc_id"]: r for r in
                rare_token_rate(docs, min_count=1).collect()}
     assert out_abs[900]["n_rare"] == 0
+
+
+def test_rare_token_rate_needs_a_threshold(spark):
+    """With neither threshold the rare test is undefined: a ValueError
+    at entry, before any plan is built."""
+    from adtk_spark.operators.corpus import rare_token_rate
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="min_count or rel_threshold"):
+        rare_token_rate(docs, min_count=None, rel_threshold=None)
 
 
 def test_charset_stats_classes(spark):
